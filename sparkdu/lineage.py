@@ -6,9 +6,17 @@ north rule. Design (SURVEY SS4.3 item 4):
 - every page row gets a stable ``partition_key = pmod(xxhash64(url), K)``;
 - the run proceeds in WAVES of partition keys; each wave is one distributed
   job: extract -> idempotent overwrite of ``extracted/partition_key=<k>/``
-  directories -> THEN append `checkpoints` rows (status='done') for exactly
-  those keys. Lineage commit strictly after data commit, so a crash can only
-  lose the in-flight wave (its partial files are overwritten on retry);
+  directories -> snapshot commit -> THEN append `checkpoints` rows
+  (status='done') for exactly those keys. Lineage commit strictly after data
+  commit, so a crash can only lose the in-flight wave (its partial files are
+  overwritten on retry);
+- the checkpoint append is not a Spark job: the driver writes the wave's
+  rows as one parquet file under a hidden temp name, fsyncs it and
+  os.replace's it into ``checkpoints/`` (`_append_checkpoint`, through
+  `snapshots._atomic_write`). It shares the snapshot commit's contract: the
+  output root is a local (POSIX) filesystem with atomic rename. The
+  directory still reads back with ``spark.read.parquet`` as
+  CHECKPOINTS_SCHEMA, old Spark-written files included;
 - resume = anti-join (J7) of partition keys against done checkpoints of the
   same run_id. On Iceberg, each wave is one snapshot commit; locally each
   wave is a dynamic-partition parquet overwrite.
@@ -21,6 +29,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import uuid
 from dataclasses import dataclass
 from typing import Iterator, Optional
 
@@ -30,7 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import parse as P
+from . import snapshots
 from .api import _load_model
+from .tables import CHECKPOINTS_SCHEMA
 
 EXTRACTED_LINEAGE_SCHEMA = T.StructType(
     [
@@ -217,14 +228,35 @@ def native_extract_udf(fmt: str, dedup: bool = True):
 
 def done_partition_keys(spark: SparkSession, cfg: ExtractJobConfig) -> set[int]:
     cp = os.path.join(cfg.out_dir, "checkpoints")
-    if not os.path.isdir(cp) or not os.listdir(cp):
+    if not os.path.isdir(cp):
         return set()
-    df = spark.read.parquet(cp)
+    # explicit schema: a directory holding only a crashed writer's leftovers
+    # (`_temporary/`, a hidden `.inprogress` file) reads as empty instead of
+    # failing schema inference
+    df = spark.read.schema(CHECKPOINTS_SCHEMA).parquet(cp)
     rows = (
         df.filter((F.col("run_id") == cfg.run_id) & (F.col("status") == "done"))
         .select("partition_key").distinct().collect()
     )
     return {r[0] for r in rows}
+
+
+def _append_checkpoint(cp_dir: str, rows: list[dict], wave: int) -> None:
+    """Append one wave's checkpoint rows as one zstd parquet file, written
+    on the driver by `snapshots._atomic_write` (hidden temp name, fsync,
+    os.replace) — no Spark job. Timestamps are stored as UTC-adjusted
+    micros, so `spark.read.parquet(cp_dir)` infers exactly
+    CHECKPOINTS_SCHEMA."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(CHECKPOINTS_SCHEMA))
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, compression="zstd")
+    os.makedirs(cp_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}-w{wave:05d}.zstd.parquet"
+    snapshots._atomic_write(os.path.join(cp_dir, name), buf.getvalue().to_pybytes())
 
 
 def run_extract_job(spark: SparkSession, pages: DataFrame, cfg: ExtractJobConfig) -> dict:
@@ -305,30 +337,27 @@ def run_extract_job(spark: SparkSession, pages: DataFrame, cfg: ExtractJobConfig
                 total["n_pages"] += int(s["n_pages"])
                 total["n_nodes"] += int(s["n_nodes"])
                 total["n_errors"] += int(s["n_errors"])
-        from .tables import CHECKPOINTS_SCHEMA
-
         # table-format commit (sparkdu.snapshots) BEFORE the checkpoint
         # append: resume keys off checkpoints, so a crash between the two
         # re-runs the wave and re-commits the same partition keys
         # (idempotent replace). Order data -> snapshot -> lineage means no
         # state where checkpointed data is invisible to snapshot readers.
-        from .snapshots import commit_wave_snapshot
-
-        total["snapshot_id"] = commit_wave_snapshot(
+        total["snapshot_id"] = snapshots.commit_wave_snapshot(
             cfg.out_dir, cfg.run_id, wi, [int(x) for x in wave_keys]
         )
-        spark.createDataFrame(cp_rows, CHECKPOINTS_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(cp_dir)
+        _append_checkpoint(cp_dir, cp_rows, wi)
         wave_df.unpersist()
         total["waves_run"] += 1
         # an all-empty wave (every key filtered to 0 rows) can leave the
-        # CollectMetrics node unexecuted — Observation.get then raises
-        # instead of returning zeros; a skewed real corpus can hit this
+        # CollectMetrics node unexecuted on some Spark versions, and
+        # Observation.get then raises instead of returning zeros (4.1
+        # returns zeros); only such a wave falls back, any other wave's
+        # failure propagates
         try:
-            total.setdefault("observed", []).append(obs.get)
+            observed = obs.get
         except Exception:
-            total.setdefault("observed", []).append(
-                {"rows_out": 0, "errors": 0, "bytes_in": 0}
-            )
+            if any(r["n_pages"] for r in cp_rows):
+                raise
+            observed = {"rows_out": 0, "errors": 0, "bytes_in": 0}
+        total.setdefault("observed", []).append(observed)
     return total

@@ -69,9 +69,13 @@ def _snap_path(out_dir: str, sid: int) -> str:
     return os.path.join(_snap_dir(out_dir), f"snap-{sid:05d}.json")
 
 
-def _atomic_write(path: str, payload: str) -> None:
-    tmp = path + ".inprogress"
-    with open(tmp, "w") as f:
+def _atomic_write(path: str, payload: str | bytes) -> None:
+    """Write `payload` to a hidden temp name beside `path`, fsync, then
+    os.replace it into place. Hidden (dot-prefixed), so a directory reader
+    that skips dot-files (Spark's file index does) never sees a torn file."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.inprogress")
+    with open(tmp, "wb" if isinstance(payload, bytes) else "w") as f:
         f.write(payload)
         f.flush()
         os.fsync(f.fileno())

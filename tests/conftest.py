@@ -12,7 +12,8 @@ from sparkdu import fixtures  # noqa: E402
 def spark():
     from sparkdu.session import get_spark
 
-    s = get_spark(app="sparkdu-tests", master="local[8]", shuffle_partitions=16)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or "8"
+    s = get_spark(app="sparkdu-tests", master=f"local[{cores}]", shuffle_partitions=16)
     yield s
     s.stop()
 
